@@ -1,5 +1,5 @@
-"""A/B: AQE coalescePartitions.parallelismFirst false (current session
-default) vs true (Spark default) on the heavy + small bench slots.
+"""A/B: AQE coalescePartitions.parallelismFirst false (the old session
+setting) vs true (Spark default) on heavy and small queries.
 
 Hypothesis (r13 optimization round, guide §2.5/§2.2): with
 ``parallelismFirst=false`` AQE coalesces every post-shuffle stage to
@@ -10,8 +10,8 @@ tables) compress to a handful of MB, so the big sorts/windows run on
 coalescing at the session's default parallelism. Small queries move the
 other way (more fixed task overhead) — measure both sides.
 
-Methodology mirrors bench.py: cold caches (blocking) before every
-sample, noop sink, median of N.
+Methodology: cold caches (blocking) before every sample, noop sink,
+median of N.
 
 Usage: python scripts/ab_parallelism_r13.py [--runs N] [query ...]
 """

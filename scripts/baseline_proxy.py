@@ -5,7 +5,7 @@ closest observable single-node baseline is DuckDB 1.x executing every
 ``oracle_sql()`` twin on the same sf0.1 parquet. This script times each
 oracle (median of 3, warm cache, full materialization via fetchall) and
 writes ``BASELINE_PROXY.json`` at the repo root; BASELINE.md carries the
-summary. bench.py timings are then comparable query-by-query: the twin
+summary. Spark timings are then comparable query-by-query: the twin
 computes the identical result, so "Spark within 2× of the proxy" is a
 meaningful single-node bar (Spark pays JVM/scheduling fixed costs DuckDB
 doesn't; Spark's win is the scale-out axis the proxy cannot measure).
@@ -83,17 +83,6 @@ def main() -> None:
         "total_sec": round(sum(out.values()), 4),
         "queries": out,
     }
-    # carry the quiet-host reference pins over (recorded separately by
-    # scripts/record_host_pin.py; bench.py's comparability stamp reads
-    # them) — a proxy re-run must never silently drop or re-baseline
-    # EITHER the legacy single 'host_pin' OR the per-sf 'host_pins'
-    # map (r12 advice: dropping host_pins stamped every non-default-sf
-    # run comparability None after any proxy re-run)
-    if os.path.exists(path):
-        prev_payload = json.load(open(path))
-        for key in ("host_pin", "host_pins"):
-            if prev_payload.get(key) is not None:
-                payload[key] = prev_payload[key]
     with open(path, "w") as f:
         json.dump(payload, f, indent=1, sort_keys=True)
     print(json.dumps({"total_sec": payload["total_sec"], "n": len(out)}))

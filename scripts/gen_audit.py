@@ -4,7 +4,7 @@ FLAGS / count_hits — and the justified allowlist live in
 tests/test_shuffle_audit.py; this script imports them so the artifact
 and the pytest gate can never audit different node sets).
 
-PLANS.md audits the bench set in detail; this sweep covers ALL queries
+PLANS.md audits the benchmark's queries in detail; this sweep covers ALL queries
 (including streaming/timeseries, which the pytest gate skips because
 their fns execute real microbatch jobs) and writes AUDIT.md listing
 only the queries where a flag fires. Exit status is the gate for the

@@ -1,14 +1,15 @@
-"""Regenerate PLANS.md — physical-plan audit of every bench-set query.
+"""Regenerate PLANS.md — physical-plan audit of the benchmark's queries.
 
-For each query in the bench set, builds the DataFrame at the given
-sf_dir (plan-only; nothing executes) and summarizes the scale-critical
-plan features: shuffle exchanges, broadcast joins/exchanges, sort-merge
-joins, WindowGroupLimit partial top-k, whole-stage-codegen span count,
-and whether the parquet scan carries pushed filters. This is the
+For each query of each workload in ``perfbench.workloads.WORKLOADS``,
+builds the DataFrame at the given sf_dir (plan-only; nothing executes)
+and summarizes the scale-critical plan features: shuffle exchanges,
+broadcast joins/exchanges, sort-merge joins, WindowGroupLimit partial
+top-k, and whether the parquet scan carries pushed filters. This is the
 "is it the plan you'd want at 100 TB" check as a standing artifact —
 regenerate after plan-affecting changes and diff.
 
-Usage: python scripts/gen_plans.py [sf_dir] (default /root/testdata/sf0.01)
+Usage: python scripts/gen_plans.py [sf_dir] (default: the benchmark's
+vendored perfbench/data/sf0.01)
 """
 
 from __future__ import annotations
@@ -21,56 +22,70 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 
+def plan_row(name: str, spec, spark, sf_dir: str) -> str:
+    if spec.category == "streaming":
+        return (
+            f"| {name} | — | — | — | — | — | — (streaming runner owns execution; "
+            "state-partition policy in streaming.py) |"
+        )
+    plan = spec.fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    # count EVERY exchange flavor — hash, range, round-robin, AND
+    # SinglePartition: an exchange the audit can't see is exactly
+    # the failure mode this table exists to prevent (a repartition()
+    # plans as RoundRobinPartitioning, not hashpartitioning)
+    n_ex = len(
+        re.findall(
+            r"Exchange (?:hashpartitioning|rangepartitioning|RoundRobinPartitioning)",
+            plan,
+        )
+    )
+    n_single = len(re.findall(r"Exchange SinglePartition", plan))
+    n_bc = len(re.findall(r"BroadcastExchange|BroadcastHashJoin", plan))
+    n_smj = len(re.findall(r"SortMergeJoin", plan))
+    n_wgl = len(re.findall(r"WindowGroupLimit", plan))
+    pushed = "yes" if re.search(r"PushedFilters: \[[^\]]", plan) else "none"
+    single = str(n_single) if n_single else ""
+    return f"| {name} | {n_ex} | {single} | {n_bc} | {n_smj} | {n_wgl} | {pushed} |"
+
+
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sf_dir = (
+        sys.argv[1] if len(sys.argv) > 1
+        else os.path.join(ROOT, "perfbench", "data", "sf0.01")
+    )
+    from perfbench.workloads import WORKLOADS
+    from x8313_etl_spark.registry import registry
     from x8313_etl_spark.session import get_spark
-    from x8313_etl_spark.registry import bench_queries
 
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
+    specs = registry()
+    shown_dir = os.path.relpath(os.path.abspath(sf_dir), ROOT)
+    if shown_dir.startswith(".."):
+        shown_dir = sf_dir
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
 
     lines = [
-        "# Physical-plan audit (bench set)",
+        "# Physical-plan audit (benchmark queries)",
         "",
         "Auto-generated by `scripts/gen_plans.py` — plan-only build at "
-        f"`{sf_dir}` on the repo session (AQE on, 32 shuffle partitions); "
-        "columns count physical-plan nodes. Streaming queries are plan-"
-        "audited on their BATCH twin shape where the streaming runner owns "
-        "execution. `pushed` = parquet scan carries PushedFilters. "
-        "(WholeStageCodegen spans only materialize in executed AQE plans, "
-        "so they are asserted by tests, not counted here.)",
-        "",
-        "| query | shuffles | all-to-one | broadcasts | SMJ | WindowGroupLimit | pushed |",
-        "|---|---|---|---|---|---|---|",
+        f"`{shown_dir}` on the repo session (AQE on, {partitions} shuffle "
+        "partitions) of every query in `perfbench/workloads.py`, one table "
+        "per workload; columns count physical-plan nodes. "
+        "Streaming queries show `—`: the streaming runner owns their "
+        "execution. `pushed` = parquet scan carries "
+        "PushedFilters. (WholeStageCodegen spans only materialize in executed "
+        "AQE plans, so they are asserted by tests, not counted here.)",
     ]
-    for name, spec in sorted(bench_queries().items()):
-        if spec.category == "streaming":
-            lines.append(
-                f"| {name} | — | — | — | — | — | — (streaming runner owns execution; "
-                "state-partition policy in streaming.py) |"
-            )
-            continue
-        df = spec.fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # count EVERY exchange flavor — hash, range, round-robin, AND
-        # SinglePartition: an exchange the audit can't see is exactly
-        # the failure mode this table exists to prevent (a repartition()
-        # plans as RoundRobinPartitioning, not hashpartitioning)
-        n_ex = len(
-            re.findall(
-                r"Exchange (?:hashpartitioning|rangepartitioning|RoundRobinPartitioning)",
-                plan,
-            )
-        )
-        n_single = len(re.findall(r"Exchange SinglePartition", plan))
-        n_bc = len(re.findall(r"BroadcastExchange|BroadcastHashJoin", plan))
-        n_smj = len(re.findall(r"SortMergeJoin", plan))
-        n_wgl = len(re.findall(r"WindowGroupLimit", plan))
-        pushed = "yes" if re.search(r"PushedFilters: \[[^\]]", plan) else "none"
-        single = str(n_single) if n_single else ""
-        lines.append(
-            f"| {name} | {n_ex} | {single} | {n_bc} | {n_smj} | {n_wgl} | {pushed} |"
-        )
+    for w in WORKLOADS.values():
+        lines += [
+            "",
+            f"## {w.name}",
+            "",
+            "| query | shuffles | all-to-one | broadcasts | SMJ | WindowGroupLimit | pushed |",
+            "|---|---|---|---|---|---|---|",
+        ]
+        lines += [plan_row(n, specs[n], spark, sf_dir) for n in w.queries]
     lines += [
         "",
         "10× spot-checks for the round-4 operators (50k docs / 150k keys, "
@@ -110,10 +125,10 @@ def main() -> None:
         "Reading guide for `all-to-one`: an Exchange SinglePartition over "
         "FACT rows is the 100 TB red flag (o4's first draft had exactly "
         "that — an unpartitioned row_number window — and was rewritten "
-        "two-phase); the entries shown here (l6_tfidf, p_bm25_topk) are "
-        "the FINAL stage of a single-row scalar aggregate (corpus doc "
-        "count / avg doc length) — one row per partial crosses the wire, "
-        "benign by construction. The column exists so the fact-row case "
+        "two-phase); the benign case is the FINAL stage of a single-row "
+        "scalar aggregate (l6_tfidf's and p_bm25_topk's corpus doc count / "
+        "avg doc length) — one row per partial crosses the wire. The "
+        "column exists so the fact-row case "
         "can never again hide as 'shuffles: 0'.",
         "",
         "Reading guide: a small-dim join showing SMJ>0 with broadcasts=0 "
@@ -128,7 +143,8 @@ def main() -> None:
     with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     spark.stop()
-    print(f"wrote PLANS.md: {len(bench_queries())} queries")
+    n = sum(len(w.queries) for w in WORKLOADS.values())
+    print(f"wrote PLANS.md: {n} queries in {len(WORKLOADS)} workloads")
 
 
 if __name__ == "__main__":

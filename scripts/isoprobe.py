@@ -1,12 +1,11 @@
-"""Isolated per-query cold-cache probe (r13 optimization round).
+"""Isolated per-query cold-cache probe.
 
 Measures queries one at a time in a single session with BLOCKING cache
-clears between samples — the same cold-cache-per-sample methodology as
-bench.py, minus the interleaved neighborhood (whose JVM-side elevation
-the r13 receipts document). Use for optimization decisions; the full
-bench.py stays the round's official record.
+clears between samples (noop sink, median of N). Use for optimization
+decisions on single queries; perfbench/run.py stays the repo's
+benchmark.
 
-Usage: python scripts/isoprobe_r13.py <query> [query ...] [--runs N]
+Usage: python scripts/isoprobe.py <query> [query ...] [--runs N]
        [--sf-dir DIR]
 """
 

@@ -1,6 +1,6 @@
-"""Assemble an FK-consistent ~sf1 replica directory (10x sf0.1) and run
-the FULL bench set against it — the whole-suite scale datapoint (first
-measured in round 4, re-buildable since round 6).
+"""Assemble an FK-consistent ~sf1 replica directory (10x sf0.1), the
+input the scale10x_* sweeps reuse (first built in round 4,
+re-buildable since round 6).
 
 Key shifts per copy c (0..9), chosen so every foreign key still
 resolves and every probe-modulus contract keeps its meaning:
@@ -16,8 +16,6 @@ resolves and every probe-modulus contract keeps its meaning:
 
 Usage:
   python scripts/scale10x_bench.py build
-  SPARK_GRAFT_SF_DIR=/root/repo/.scratch/replica10x_bench \\
-      SPARK_GRAFT_BENCH_RUNS=1 python bench.py
 """
 
 import os

@@ -5,9 +5,10 @@ sample, noop sink — the bench methodology) so optimization targets the
 measured stage, not the guessed one.
 
 Usage: python scripts/stageprobe_r14.py <probe> [...] [--runs N]
-Probes: simhash_sketch simhash_full minhash_shingle minhash_sig
-        minhash_full inc_full inc_sketch pq_scored pq_full itemcf_pairs
-        itemcf_full semlsh_sketch semlsh_pairs semlsh_full
+       [--sf-dir DIR]
+Probes: simhash_sketch simhash_tokhash simhash_full minhash_shingle
+        minhash_sig minhash_full inc_full pq_full itemcf_full
+        semlsh_full
 """
 
 from __future__ import annotations
@@ -52,17 +53,8 @@ def main() -> None:
         return docs().repartition(sp)
 
     def probe_fns():
-        from x8313_etl_spark.operators.increment import incremental_near_dups
-        from x8313_etl_spark.operators.minhash import (
-            near_dup_pairs,
-            shingle_table,
-            signature_from_shingles,
-            signature_table,
-        )
-        from x8313_etl_spark.queries.pipeline_q import (
-            _simhash_table,
-            simhash_table_native,
-        )
+        from x8313_etl_spark.operators.minhash import shingle_table, signature_table
+        from x8313_etl_spark.queries.pipeline_q import simhash_table_native
 
         reg = registry()
         return {
@@ -115,6 +107,7 @@ def main() -> None:
             f"{name}: median={statistics.median(samples):.3f} "
             f"min={min(samples):.3f} max={max(samples):.3f}"
         )
+    spark.stop()
 
 
 if __name__ == "__main__":

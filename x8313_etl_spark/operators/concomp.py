@@ -57,9 +57,10 @@ def connected_components(
 
     ``nodes`` must hold every vertex (isolated vertices become singleton
     components); ``edges`` may be directed, duplicated, or self-looped —
-    it is symmetrized and de-duplicated here. The result is returned
-    materialized (the final checkpointed label table), not as a lazy
-    plan over the whole iteration history.
+    it is symmetrized and de-duplicated here. The result is the final
+    checkpointed label table (edge-touched vertices) unioned with a lazy
+    singleton branch over ``nodes``: no lineage into the iteration
+    history or the edge generator, but consuming it re-reads ``nodes``.
 
     Every plan this operator materializes — the symmetrized edge table
     and each checkpointed round — is filed in the audit ledger under

@@ -70,7 +70,6 @@ def incremental_near_dups(
     cache: bool = True,
     index_sig: DataFrame | None = None,
     index_sh: DataFrame | None = None,
-    ledger_key: str | None = None,
 ) -> DataFrame:
     """(doc_id, is_dup, dup_of, jaccard): one row per batch doc.
 
@@ -102,8 +101,7 @@ def incremental_near_dups(
     ledger — replacing the old raw-persist + eager-verdict-checkpoint
     + unpersist dance, whose checkpoint cost one extra full
     materialization of the verdict per invocation. Every path now
-    returns a plain lazy frame. ``ledger_key`` is accepted for caller
-    compatibility and unused.
+    returns a plain lazy frame.
     """
     sp = batch_docs.sparkSession.sparkContext.defaultParallelism
     batch_docs = batch_docs.repartition(sp)
@@ -217,8 +215,6 @@ def incremental_near_dups(
     )
     # cache lifetime is owned by the keyed swap-pool (see the batch-side
     # note): no eager verdict materialization, no per-call unpersist —
-    # the verdict returns lazy on every path. ledger_key is retained in
-    # the signature for callers that recorded it historically; the pool
-    # keys file the same plans in the audit ledger.
-    del ledger_key
+    # the verdict returns lazy on every path; the pool keys file the
+    # plans in the audit ledger.
     return verdict

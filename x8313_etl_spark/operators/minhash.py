@@ -107,26 +107,14 @@ def shingle_table(
 def signature_table(
     docs: DataFrame, id_col: str, text_col: str, k: int = _SHINGLE_K
 ) -> DataFrame:
-    """(doc_id, sig) via the ALL-NATIVE sketch path: explode shingles,
-    hash each once per row (md5→bigint, plain expressions), then one
-    groupBy with 32 ``min(perm_i(h))`` native aggregates → the
-    signature array. Bit-identical to the HOF fold in
-    ``minhash_signature`` (asserted at 50k docs) but stays inside
-    whole-stage codegen, where the fold's ``aggregate``/``zip_with``
-    lambdas are interpreted per element — measured 15.9s → 7.3s for the
-    50k-doc sketch+persist.
-
-    Scale shape: the explode keeps each doc's shingles in their input
-    partition, so the min-aggregates partial-combine map-side to ONE
-    row per doc before the shuffle — the exchange carries exactly the
-    signature table, same bytes as a map-only computation would, at any
-    corpus size. Docs with < k words produce no rows (same semantics as
-    filtering empty shingle arrays).
-
-    r14: routed through the ``signature_from_shingles`` numpy kernel
-    (map-only, no exchange at all — see its docstring); this docstring's
-    aggregate shape survives as ``_signature_from_exploded``, the
-    reference form the kernel is bit-asserted against."""
+    """(doc_id, sig) via ``shingle_table`` and the
+    ``signature_from_shingles`` numpy kernel (map-only, no exchange at
+    any corpus size — see its docstring). Bit-identical to the HOF fold
+    in ``minhash_signature`` (tests/test_minhash_unit.py::
+    test_native_signature_matches_hof_fold) without the fold's
+    per-element interpreted ``aggregate``/``zip_with`` lambdas. Docs
+    with < k words produce no rows (same semantics as filtering empty
+    shingle arrays)."""
     return signature_from_shingles(shingle_table(docs, id_col, text_col, k))
 
 
@@ -211,24 +199,6 @@ def signature_from_shingles(sh: DataFrame) -> DataFrame:
 
     return sh.select("doc_id", "sh").mapInPandas(
         go, "doc_id long, sig array<bigint>"
-    )
-
-
-def _signature_from_exploded(ex: DataFrame) -> DataFrame:
-    """(doc_id, sig) from exploded (doc_id, s) shingle rows."""
-    h0 = F.pmod(
-        F.conv(F.substring(F.md5(F.col("s")), 1, 15), 16, 10).cast("bigint"),
-        F.lit(MINHASH_P),
-    )
-    exh = ex.select("doc_id", h0.alias("h0"))
-    aggs = [
-        F.min(F.pmod(F.col("h0") * F.lit(PERM_A[i]) + F.lit(PERM_B[i]), F.lit(MINHASH_P))).alias(f"s{i}")
-        for i in range(N_HASHES)
-    ]
-    return (
-        exh.groupBy("doc_id")
-        .agg(*aggs)
-        .select("doc_id", F.array(*[f"s{i}" for i in range(N_HASHES)]).alias("sig"))
     )
 
 

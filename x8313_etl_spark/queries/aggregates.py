@@ -19,7 +19,6 @@ from ..registry import register
 @register(
     "a1_groupby_basic",
     category="aggregation",
-    bench=True,
     oracle=f"""
 SELECT l_returnflag,
        l_linestatus,

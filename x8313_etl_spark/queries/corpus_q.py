@@ -370,7 +370,6 @@ SELECT q_id, doc_id, score_u6, CAST(rn AS BIGINT) AS rn FROM (
 @register(
     "p_bm25_topk",
     category="pipeline",
-    bench=True,
     oracle=_BM25_SQL,
 )
 def p_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -508,7 +507,6 @@ PACK_CTX = 512
 @register(
     "p_sequence_pack",
     category="pipeline",
-    bench=True,
     oracle=f"""
 WITH t AS (
   SELECT doc_id, source,
@@ -965,7 +963,6 @@ def p_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "p_corpus_clean",
     category="pipeline",
-    bench=True,
     oracle=f"""
 WITH u AS (
   SELECT doc_id, text, lang, n_chars FROM documents

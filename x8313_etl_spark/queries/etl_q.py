@@ -33,7 +33,6 @@ INS_KEY_OFFSET = 1_000_000
 @register(
     "m1_merge_upsert",
     category="etl",
-    bench=True,
     oracle=f"""
 WITH base AS (SELECT c_custkey, c_acctbal FROM customer),
 upd AS (SELECT c_custkey, c_acctbal + 100.0 AS new_bal FROM base WHERE c_custkey % {UPD_MOD} = 0),

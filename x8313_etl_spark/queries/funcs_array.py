@@ -84,7 +84,6 @@ def f10_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "f11_higher_order",
-    bench=True,
     category="functions",
     oracle="""
 SELECT vec_id,

@@ -111,7 +111,6 @@ def j2c_right_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "j3_broadcast_star_join",
     category="joins",
-    bench=True,
     oracle=f"""
 SELECT r.r_name,
        COUNT(*) AS n_customers,
@@ -228,7 +227,6 @@ def j7_theta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "j8_range_join",
     category="joins",
-    bench=True,
     oracle="""
 WITH p AS (
   SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS p_ts
@@ -277,7 +275,6 @@ def j8_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "j9_asof_join",
     category="joins",
-    bench=True,
     oracle="""
 WITH p AS (
   SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS p_ts
@@ -349,7 +346,6 @@ def j10_self_join_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "j11_star_join_revenue",
     category="joins",
-    bench=True,
     oracle=f"""
 SELECT r.r_name, n.n_name,
        {sql_dsum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue,

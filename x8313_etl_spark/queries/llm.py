@@ -53,7 +53,6 @@ sig AS (SELECT doc_id, sh,
 @register(
     "l1_exact_dedup",
     category="llm",
-    bench=True,
     oracle="""
 WITH u AS (
   SELECT doc_id, text FROM documents
@@ -117,7 +116,6 @@ def l2_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "l2_near_dup_pairs",
     category="llm",
-    bench=True,
     oracle=f"""
 WITH {_SQL_SHINGLE_CTES}
 SELECT doc_a, doc_b, jaccard FROM (
@@ -338,7 +336,6 @@ def l5_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "l6_tfidf",
-    bench=True,
     category="llm",
     oracle="""
 WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),

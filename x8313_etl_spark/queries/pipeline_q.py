@@ -332,7 +332,6 @@ def _simhash_candidates(s) -> DataFrame:
 
 @register(
     "p_simhash_pairs",
-    bench=True,
     category="pipeline",
     oracle=f"""
 WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
@@ -1357,9 +1356,6 @@ LEFT JOIN best ON best.new_id = d.doc_id
 @register(
     "p_incremental_dedup",
     category="pipeline",
-    bench=True,  # r9 bench-set addition: the ingest-dedup growth story
-    # gets a per-round floor like the rest of the near-dup family
-    # (r8 verdict item 8; BASELINE.md bench-set-change note)
     oracle=_incremental_dedup_sql(),
 )
 def p_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1388,9 +1384,7 @@ def p_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     index = d.filter(F.col("doc_id") % _DELTA_MOD != 0)
     batch = d.filter(F.col("doc_id") % _DELTA_MOD == 0)
-    return incremental_near_dups(
-        index, batch, threshold=_INC_TAU, ledger_key="p_incremental_dedup"
-    )
+    return incremental_near_dups(index, batch, threshold=_INC_TAU)
 
 
 def _golden_sql() -> str:
@@ -1815,7 +1809,6 @@ SELECT item, other, c_ab, c_i, c_o, rn FROM (
 @register(
     "p_item_cf",
     category="pipeline",
-    bench=True,
     oracle=_CF_SQL,
 )
 def p_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:

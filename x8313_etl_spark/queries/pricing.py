@@ -42,7 +42,6 @@ ORDER BY l_returnflag, l_linestatus
     "q1_pricing_summary",
     oracle=_ORACLE,
     category="flagship",
-    bench=True,
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pricing summary report: per (returnflag, linestatus) aggregates."""

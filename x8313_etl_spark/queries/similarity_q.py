@@ -83,7 +83,6 @@ def sim_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sim_ivf_topk",
     category="similarity",
-    bench=True,
     oracle=f"""
 WITH e AS (SELECT vec_id, embedding FROM embeddings),
 cent AS (SELECT vec_id AS cent_id, embedding AS cvec FROM embeddings
@@ -312,7 +311,6 @@ def _sql_sketch(vec: str, planes: list[list[float]] | None = None) -> str:
 @register(
     "sim_lsh_neardup",
     category="similarity",
-    bench=True,
     oracle=f"""
 WITH s AS (
   SELECT vec_id, embedding, {_sql_sketch('embedding')} AS sk FROM embeddings
@@ -617,7 +615,6 @@ _SQL_BAND_HIT = " OR ".join(
 @register(
     "p_semantic_dedup_lsh",
     category="similarity",
-    bench=True,
     oracle=f"""
 WITH RECURSIVE s AS MATERIALIZED (
   SELECT vec_id, embedding, {_sql_sketch('embedding', HYPERPLANES32)} AS sk
@@ -692,7 +689,6 @@ _KNN_PROBE_CAP = 2000
 @register(
     "l10_knn_ivf",
     category="similarity",
-    bench=True,
     oracle=f"""
 WITH e AS (SELECT vec_id, embedding, label FROM embeddings),
 cent AS (SELECT vec_id AS cent_id, embedding AS cvec FROM embeddings
@@ -814,7 +810,6 @@ _SQL_PQ_D2 = (
 @register(
     "sim_pq_topk",
     category="similarity",
-    bench=True,
     oracle=f"""
 WITH mm AS (SELECT unnest(generate_series(0, {_PQ_M - 1})) AS m),
 blocks AS MATERIALIZED (
@@ -871,9 +866,10 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     20× (measured) — the probe budget, not the corpus, must bound the
     multiplier.
 
-    One scored table (vector-block × centroid d², pooled via
-    swap_persist) feeds BOTH the encoder argmin and the probe lookup
-    slices, because probes are corpus members. Cross-engine exactness:
+    One block × centroid d² fold (``_pq_block_d2``) serves BOTH the
+    encoder argmin (per Arrow batch) and the probe lookup table (once,
+    driver-side), because probes are corpus members; ``_pq_adc_scores``
+    is a single map-only numpy pass. Cross-engine exactness:
     block d² is the dimension-sequential fold (float32 inputs make each
     product exact in double), and the ADC sum folds the 8 block terms
     in EXPLICIT m order on both engines (array_sort + fold vs
@@ -1090,8 +1086,8 @@ WHERE rn <= {_PQ_TOPK}
 def sim_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage retrieval — the production ANN shape: stage 1 scores
     PQ CODES by asymmetric distance (compressed-domain scan, the
-    sim_pq_topk core, shared via _pq_adc_scores and the pooled score
-    table) and keeps 25 candidates per probe; stage 2 re-ranks ONLY
+    sim_pq_topk core, shared via _pq_adc_scores) and keeps 25
+    candidates per probe; stage 2 re-ranks ONLY
     those candidates by exact cosine over the full vectors and returns
     the top 5. This is how real systems spend their compute: the cheap
     approximate scan touches everything, the exact math touches
@@ -1145,7 +1141,6 @@ _NPROBE = 4
 @register(
     "sim_ivf_multiprobe",
     category="similarity",
-    bench=True,
     oracle=f"""
 WITH e AS (SELECT vec_id, embedding FROM embeddings),
 cent AS (SELECT vec_id AS cent_id, embedding AS cvec FROM embeddings

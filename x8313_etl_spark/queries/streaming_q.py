@@ -21,7 +21,6 @@ from ..streaming import run_to_memory
 @register(
     "t1_tumbling_window",
     category="streaming",
-    bench=True,
     oracle=f"""
 SELECT time_bucket(INTERVAL '10 minutes', ts) AS wstart,
        time_bucket(INTERVAL '10 minutes', ts) + INTERVAL 10 MINUTE AS wend,

@@ -32,7 +32,6 @@ from ..registry import register
 @register(
     "ts_gap_fill",
     category="timeseries",
-    bench=True,
     oracle=f"""
 WITH hourly AS (
   SELECT event_type, date_trunc('hour', ts) AS hour,

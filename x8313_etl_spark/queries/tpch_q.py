@@ -141,7 +141,6 @@ def h4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "h5_local_supplier_volume",
     category="analytics",
-    bench=True,
     oracle=f"""
 SELECT n_name, {sql_dsum(_REV)} AS revenue
 FROM customer
@@ -626,7 +625,6 @@ def h17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "h18_large_volume_customer",
     category="analytics",
-    bench=True,
     oracle=f"""
 SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice,
        {sql_dsum_cents('l_quantity')} AS total_qty

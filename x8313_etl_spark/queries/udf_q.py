@@ -108,7 +108,6 @@ def x3_grouped_agg_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x4_apply_in_pandas",
-    bench=True,
     category="udf",
     oracle="""
 SELECT l_orderkey, l_linenumber, l_returnflag,

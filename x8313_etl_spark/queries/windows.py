@@ -211,7 +211,6 @@ def w6_first_last_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "w7_topk_per_group",
     category="windows",
-    bench=True,
     oracle="""
 SELECT o_custkey, o_orderkey, o_totalprice
 FROM orders

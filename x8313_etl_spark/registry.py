@@ -26,8 +26,6 @@ class QuerySpec:
     oracle: str | None  # DuckDB SQL twin; None → rows-only check
     category: str  # SURVEY.md §2 subsection, e.g. "joins"
     doc: str = ""
-    #: queries worth timing at sf0.1 in bench.py
-    bench: bool = False
     #: abs tolerance used by OUR local gate (driver hash is stricter; 0.0
     #: means we require exact equality locally)
     tolerance: float = 0.0
@@ -75,7 +73,6 @@ def register(
     *,
     oracle: str | None = None,
     category: str = "",
-    bench: bool = False,
     tolerance: float = 0.0,
     tags: tuple[str, ...] = (),
 ) -> Callable[[QueryFn], QueryFn]:
@@ -94,7 +91,6 @@ def register(
             oracle=oracle,
             category=category,
             doc=(fn.__doc__ or "").strip(),
-            bench=bench,
             tolerance=tolerance,
             tags=tuple(tags),
         )
@@ -380,7 +376,3 @@ def queries() -> dict[str, QueryFn]:
 
 def oracle_sql() -> dict[str, str]:
     return {n: s.oracle for n, s in registry().items() if s.oracle is not None}
-
-
-def bench_queries() -> dict[str, QuerySpec]:
-    return {n: s for n, s in registry().items() if s.bench}

@@ -49,25 +49,6 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def _bool_env(name: str, default: str) -> str:
-    """Normalize a boolean env override to the literal 'true'/'false'
-    Spark conf values. Anything else ('1', 'yes', a typo) raised an
-    opaque IllegalArgumentException from deep inside session build —
-    fail here instead, naming the variable (r13 ADVICE)."""
-    raw = os.environ.get(name)
-    if raw is None:
-        return default
-    v = raw.strip().lower()
-    if v in ("true", "1", "yes", "on"):
-        return "true"
-    if v in ("false", "0", "no", "off"):
-        return "false"
-    raise ValueError(
-        f"{name} must be a boolean ('true'/'false'/'1'/'0'/'yes'/'no'), "
-        f"got {raw!r}"
-    )
-
-
 def get_spark(app_name: str = "x8313-etl-spark", cpus: int | None = None) -> SparkSession:
     """Local session configured the way we'd configure a cluster.
 
@@ -88,25 +69,12 @@ def get_spark(app_name: str = "x8313-etl-spark", cpus: int | None = None) -> Spa
         .config("spark.default.parallelism", str(n))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE coalescing: parallelism-first (the Spark default). The r12
-        # posture pinned this to false (respect the 64 MB advisory), but
-        # measured across the bench set that coalesced EVERY post-shuffle
-        # stage at bench scale to 1-2 tasks — the heavy intermediates
-        # (p_item_cf's 2.4M-row symmetrized pair table, the LSH candidate
-        # tables) compress to a few MB, so their window sorts and verify
-        # joins serialized on one core while 31 idled. A/B at sf0.1
-        # local[32], cold caches, median of 3 (scripts/ab_parallelism_r13.py):
-        # p_item_cf 6.72→2.72 s, 10 of 13 slots 0.87-0.96×, worst
-        # regression a1_groupby_basic +0.04 s; subset total 23.5→18.2 s.
-        # Parallelism-first also makes post-shuffle parallelism track the
-        # session core count, so per-core scaling is measurable at all.
-        # On a BUSY shared cluster the advisory-size posture is still the
-        # right call — that is what the env override is for; the default
-        # matches Spark's own.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            _bool_env("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
+        # AQE coalescing stays parallelism-first (Spark's default, left
+        # unset): the 64 MB advisory size coalesced every post-shuffle
+        # stage at bench scale to 1-2 tasks, serializing the heavy
+        # intermediates' sorts and joins on one core
+        # (scripts/ab_parallelism_r13.py: p_item_cf 6.72→2.72 s at sf0.1).
+        # A busy shared cluster sets it to false instead (DEPLOY.md).
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
